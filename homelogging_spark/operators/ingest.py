@@ -64,7 +64,9 @@ def append_readings(
 
 
 def read_readings(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    from homelogging_spark.tables import read_parquet
+
+    return read_parquet(spark, path)
 
 
 def refresh_rollup(
@@ -83,18 +85,45 @@ def refresh_rollup(
 
     The scale contract: a day of new readings must never trigger a full
     -history recompute. The rollup is parquet partitioned by ``date``;
-    refresh reads just the changed dates from the base (partition
-    pruning), re-aggregates them, and dynamically overwrites exactly
-    those rollup partitions (``partitionOverwriteMode=dynamic`` — the
-    other partitions' files are untouched). Idempotent: re-running for
-    the same dates rewrites identical content.
+    refresh reads just the changed dates from the base, re-aggregates
+    them, and dynamically overwrites exactly those rollup partitions
+    (``partitionOverwriteMode=dynamic`` — the other partitions' files
+    are untouched). Idempotent: re-running for the same dates rewrites
+    identical content.
     """
-    from homelogging_spark.functions.timeutils import time_bucket
+    agg = rollup_frame(
+        spark, readings_path, changed_dates, bucket, keys, ts_col, value_col
+    )
+    writer = agg.write.mode("overwrite").partitionBy("date")
+    with _dynamic_partition_overwrite(spark):
+        writer.parquet(rollup_path)
 
-    base = spark.read.parquet(readings_path)
+
+def rollup_frame(
+    spark: SparkSession,
+    readings_path: str,
+    changed_dates: Sequence[str] | None = None,
+    bucket: str = "hour",
+    keys: Sequence[str] = ("meter_id", "series"),
+    ts_col: str = "ts",
+    value_col: str = "value",
+) -> DataFrame:
+    """The rollup rows :func:`refresh_rollup` writes: per key and
+    ``bucket``, avg/sum/count of ``value_col``, with the bucket's
+    ``date``. With ``changed_dates``, a base that has a ``date`` column
+    (the K1 ``(series, date)`` layout, where it is a partition column
+    equal to ``to_date(ts)``) is filtered on it, so the scan prunes to
+    those partitions; Spark cannot prune on ``to_date(ts)``, which is the
+    filter for any other base."""
+    from homelogging_spark.functions.timeutils import time_bucket
+    from homelogging_spark.tables import read_parquet
+
+    base = read_parquet(spark, readings_path)
     if changed_dates is not None:
-        base = base.where(F.to_date(F.col(ts_col)).isin(list(changed_dates)))
-    agg = (
+        dates = [F.lit(d).cast("date") for d in changed_dates]
+        day = F.col("date") if "date" in base.columns else F.to_date(F.col(ts_col))
+        base = base.where(day.isin(dates))
+    return (
         base.groupBy(
             *keys,
             time_bucket(F.col(ts_col), bucket).alias("bucket"),
@@ -106,9 +135,6 @@ def refresh_rollup(
         )
         .withColumn("date", F.to_date("bucket"))
     )
-    writer = agg.write.mode("overwrite").partitionBy("date")
-    with _dynamic_partition_overwrite(spark):
-        writer.parquet(rollup_path)
 
 
 def snapshot_cdc_diff(

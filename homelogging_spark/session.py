@@ -29,6 +29,17 @@ def get_spark(
       columnar batches instead of pickled rows.
     - Shuffle partitions default to max(cores, 32) locally; on a real
       cluster, AQE coalesces the (intentionally high) initial number.
+    - DataFrame call-site capture off
+      (``spark.python.sql.dataFrameDebugging.enabled=false``). With it
+      on, PySpark wraps every DataFrame/Column API call to stamp the
+      Python call site into error messages, at about six py4j round
+      trips per call: some 40 % of the round trips of a telemetry query
+      build. The trade-off: a runtime error no longer names the Python
+      file:line that built the failing expression; its error class and
+      message stay. Pass the conf as ``"true"`` in ``extra_conf`` to get
+      the call sites back. It is a static conf, and PySpark reads it
+      once per process, so it takes effect only on the call that
+      creates the process's session.
     """
     # must precede session creation: TWS Python workers need
     # google.protobuf, and they inherit PYTHONPATH at context start
@@ -57,6 +68,7 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

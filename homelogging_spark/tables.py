@@ -4,11 +4,29 @@ All operators take DataFrames, so these helpers are thin: a scan per table
 with column pruning / predicate pushdown left entirely to Catalyst. At
 100 TB the same tables would be date/key-partitioned parquet or Delta; the
 reader code is unchanged.
+
+Every table and fixture is read through :func:`read_parquet`, which
+memoizes the schema Spark infers on a path's first read. An unschema'd
+``spark.read.parquet`` starts a footer-reading Spark job on every call;
+the reference's clients run many small repeated queries over the same
+tables, so that job was a fixed cost of every query. The memo is per
+session and is keyed on the absolute path, the
+``spark.sql.legacy.parquet.nanosAsLong`` value (it changes what a
+TIMESTAMP(NANOS) column infers to) and a fingerprint of the path and
+its ``_SUCCESS`` marker (inode, mtime_ns, size). Every committed Spark
+write rewrites ``_SUCCESS``, so a write to the path forces a fresh
+inference. A hit passes the memoized schema to the reader: Spark still
+lists the files, so new files and partitions are seen, but it starts no
+job. A path that cannot be fingerprinted (missing, or a URI with a
+scheme) is always read the plain way, so its errors stay Spark's own.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+import weakref
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -29,6 +47,56 @@ TABLE_NAMES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+# session -> {(absolute path, nanosAsLong): (fingerprint, schema)}. Weakly
+# keyed, so the memo lives and dies with its session; one entry per path,
+# replaced when the path's fingerprint changes.
+_SCHEMA_MEMO: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_SCHEMA_MEMO_LOCK = threading.Lock()
+
+
+def _stat_key(path: str) -> tuple[int, int, int]:
+    st = os.stat(path)
+    return (st.st_ino, st.st_mtime_ns, st.st_size)
+
+
+def _fingerprint(path: str) -> tuple | None:
+    """(path stat, _SUCCESS stat or None), or None when the path is a
+    URI with a scheme or does not exist."""
+    if urlparse(path).scheme:
+        return None
+    try:
+        own = _stat_key(path)
+    except OSError:
+        return None
+    try:
+        success = _stat_key(os.path.join(path, "_SUCCESS"))
+    except OSError:  # a single file, or a directory no Spark job committed
+        success = None
+    return (own, success)
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the inferred schema memoized per
+    session (see the module docstring for the key and when it is
+    refreshed)."""
+    fp = _fingerprint(path)
+    if fp is None:
+        return spark.read.parquet(path)
+    key = (
+        os.path.abspath(path),
+        spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"),
+    )
+    with _SCHEMA_MEMO_LOCK:
+        hit = _SCHEMA_MEMO.get(spark, {}).get(key)
+    if hit is not None and hit[0] == fp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    schema = df.schema
+    with _SCHEMA_MEMO_LOCK:
+        _SCHEMA_MEMO.setdefault(spark, {})[key] = (fp, schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     try:
         # Runtime-settable; required to read TIMESTAMP(NANOS) parquet when
@@ -36,7 +104,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     except Exception:
         pass
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     # Normalize the timestamp physical encodings the driver testdata has
     # shipped across rounds to a plain TIMESTAMP (LTZ) column:
     #  - TIMESTAMP(NANOS) arrives as nanosecond longs (see
@@ -185,7 +253,7 @@ def meters_table(spark: SparkSession, sf_dir: str) -> DataFrame:
                 upsert_meters(existing, updates).coalesce(1).write.mode(
                     "overwrite"
                 ).parquet(path)
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def series_flow_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -206,7 +274,7 @@ def series_flow_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         with _fixture_build_lock(path):
             if _fixture_stale(path, src):
                 _build_series_flow(spark, sf_dir, path)
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def _build_series_flow(spark: SparkSession, sf_dir: str, path: str) -> None:
@@ -259,7 +327,7 @@ def compacted_readings_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         with _fixture_build_lock(path):
             if _fixture_stale(path, src):
                 _build_compacted_readings(spark, sf_dir, path)
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 # The fixture's slice of events: two series over the first ten days —
@@ -319,7 +387,7 @@ def zordered_readings_table(spark: SparkSession, sf_dir: str) -> DataFrame:
                 t = compacted_readings_table(spark, sf_dir)
                 shutil.rmtree(path, ignore_errors=True)
                 zorder_rewrite(t, path, ["meter_id", "value"], n_files=8, bits=4)
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def inc_zordered_readings_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -370,7 +438,7 @@ def inc_zordered_readings_table(spark: SparkSession, sf_dir: str) -> DataFrame:
                     layout_cols=["meter_id", "value"],
                     layout_kwargs=dict(n_files=8, bits=4),
                 ).collect()
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 METERS_DIM_SQL = """

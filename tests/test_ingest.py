@@ -307,3 +307,54 @@ class TestRollupRefresh:
         # the Jan 2 bucket now includes the late row
         jan2 = [v for k, v in got.items() if k[2].day == 2]
         assert jan2 == [(4.0, 12.0, 3)]
+
+    def test_partitioned_base_prunes_to_changed_dates(self, spark, tmp_path):
+        """On the K1 (series, date) layout the changed-dates filter must
+        reach the scan as a partition filter, so a refresh reads only
+        the changed days."""
+        import datetime as dt
+        import re
+
+        from homelogging_spark.operators.ingest import (
+            append_readings,
+            refresh_rollup,
+            rollup_frame,
+        )
+
+        base = str(tmp_path / "readings")
+        roll = str(tmp_path / "rollup")
+        schema = "meter_id string, series string, ts timestamp, value double"
+
+        def rows(day, vals):
+            return spark.createDataFrame(
+                [
+                    ("m1", "Power", dt.datetime(2024, 1, day, 10, m), float(v))
+                    for m, v in enumerate(vals)
+                ],
+                schema,
+            )
+
+        append_readings(rows(1, [1, 2]).unionByName(rows(2, [3, 4])), base)
+        refresh_rollup(spark, base, roll)
+        late = rows(2, [9]).withColumn("ts", F.col("ts") + F.expr("INTERVAL 5 MINUTES"))
+        append_readings(late, base)
+
+        plan = rollup_frame(
+            spark, base, changed_dates=["2024-01-02"]
+        )._jdf.queryExecution().executedPlan().toString()
+        scan = next(ln for ln in plan.splitlines() if "FileScan parquet" in ln)
+        part_filters = re.search(r"PartitionFilters: \[([^\]]*)\]", scan).group(1)
+        assert "date" in part_filters
+
+        refresh_rollup(spark, base, roll, changed_dates=["2024-01-02"])
+        full = str(tmp_path / "rollup_full")
+        refresh_rollup(spark, base, full)
+
+        def table(path):
+            return sorted(
+                (r.meter_id, r.series, r.bucket, r.avg_value, r.sum_value, r.n)
+                for r in spark.read.parquet(path).collect()
+            )
+
+        assert table(roll) == table(full)
+        assert [r[5] for r in table(roll) if r[2].day == 2] == [3]

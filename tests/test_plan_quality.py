@@ -473,3 +473,56 @@ class TestFoldPartitioning:
                     offenders.append((name, feeding.strip() or "NO EXCHANGE"))
         assert offenders == []
         assert n_folds >= 4  # kasa_offset_exact, battery x2, pack x2 reach here
+
+
+# The telemetry read queries dashboards and control loops rerun every
+# few minutes: their per-query fixed cost is plan construction.
+TELEMETRY_QUERIES = (
+    "flagship_hourly_cost",
+    "battery_panel",
+    "asof_price_join",
+    "counter_rollover",
+    "device_class_scan",
+)
+
+
+class TestWarmBuildCost:
+    @pytest.mark.parametrize("name", TELEMETRY_QUERIES)
+    def test_warm_build_starts_no_job(self, spark, jobs_started, name):
+        """Once the fixtures exist and every table's schema is memoized
+        (tables.read_parquet), building the query is pure planning: a
+        job here is a schema inference or an eager action paid on every
+        rerun."""
+        import __spark_entry__ as entry
+
+        fn = entry.queries()[name]
+        fn(spark, SF)  # first touch: fixture builds, schema inference
+        _, jobs = jobs_started(lambda: fn(spark, SF))
+        assert jobs == 0
+
+    def test_call_site_capture_off_by_default_and_restorable(self, spark):
+        """Off in every get_spark() session; a static conf, so turning it
+        back on through extra_conf needs a process of its own."""
+        import os
+        import subprocess
+        import sys
+
+        key = "spark.python.sql.dataFrameDebugging.enabled"
+        assert spark.conf.get(key) == "false"
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        probe = (
+            "from homelogging_spark.session import get_spark\n"
+            f"s = get_spark(master='local[1]', extra_conf={{{key!r}: 'true'}})\n"
+            f"print(s.conf.get({key!r}))\n"
+            "s.stop()\n"
+        )
+        out = subprocess.run(
+            [sys.executable, "-c", probe],
+            cwd=root,
+            env=dict(os.environ, SPARK_DRIVER_MEMORY="512m"),
+            capture_output=True,
+            text=True,
+            timeout=300,
+        )
+        assert out.returncode == 0, out.stderr[-2000:]
+        assert out.stdout.strip().splitlines()[-1] == "true"

@@ -12,11 +12,14 @@ For each query, times:
 
 The bench times build+exec per iteration, so (rebuild+exec2) ~= the
 bench median; the build/exec split says whether to attack plan size or
-execution.
+execution. Next to each time, ``[N jobs]`` is the number of Spark jobs
+that step started: a warm rebuild should start none, so a job there is
+a schema inference or an eager action paid on every run of the query.
 """
 
 from __future__ import annotations
 
+import itertools
 import os
 import sys
 import time
@@ -42,28 +45,41 @@ def main() -> None:
     load_table(spark, sf_dir, "events").count()
     load_table(spark, sf_dir, "lineitem").count()
 
+    sc = spark.sparkContext
+    groups = itertools.count()
+
+    def timed(step):
+        """(step(), its seconds, the Spark jobs it started)."""
+        group = f"profile-{next(groups)}"
+        sc.setJobGroup(group, group)
+        t0 = time.time()
+        try:
+            out = step()
+            elapsed = time.time() - t0
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        # the status tracker is fed by the asynchronous listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, elapsed, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def noop(df):
+        df.write.format("noop").mode("overwrite").save()
+
     for n in names:
         fn = qs[n]
-        spark.sparkContext.setJobDescription(f"profile:{n}")
-        t0 = time.time()
-        df = fn(spark, sf_dir)
-        t1 = time.time()
-        df.write.format("noop").mode("overwrite").save()
-        t2 = time.time()
+        df, build, build_j = timed(lambda: fn(spark, sf_dir))
+        _, exec1, exec1_j = timed(lambda: noop(df))
         release_caches()
-        t3 = time.time()
-        df2 = fn(spark, sf_dir)
-        t4 = time.time()
-        df2.write.format("noop").mode("overwrite").save()
-        t5 = time.time()
+        df2, rebuild, rebuild_j = timed(lambda: fn(spark, sf_dir))
+        _, exec2, exec2_j = timed(lambda: noop(df2))
         release_caches()
         print(
-            f"{n}: build={t1-t0:.3f} exec1={t2-t1:.3f} "
-            f"rebuild={t4-t3:.3f} exec2={t5-t4:.3f} "
-            f"(bench-like iter={t4-t3+t5-t4:.3f})",
+            f"{n}: build={build:.3f} [{build_j} jobs] exec1={exec1:.3f} [{exec1_j} jobs] "
+            f"rebuild={rebuild:.3f} [{rebuild_j} jobs] exec2={exec2:.3f} [{exec2_j} jobs] "
+            f"(bench-like iter={rebuild + exec2:.3f})",
             flush=True,
         )
-        spark.sparkContext.setJobDescription(None)
 
 
 if __name__ == "__main__":
