@@ -15,7 +15,7 @@ execution threads) must NOT use the global release — it would unpersist
 every other job's tracked frames mid-computation; they wrap their work
 in ``cache_scope()``, which releases only the frames the current thread
 tracked inside the scope. Frames memoized across queries on purpose
-(the battery sim, ``plans/battery_registry._SIM_CACHE``) do NOT use
+(the battery sim, ``plans/battery_registry._shared_sim``) do NOT use
 this tracker: releasing them would silently turn the memo into a
 recompute-every-use.
 """
@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 
 _LOCK = threading.RLock()
 _TRACKED: list[tuple[int, DataFrame]] = []
+_COUNT = threading.local()
 
 
 def tracked_persist(df: DataFrame) -> DataFrame:
@@ -36,7 +37,15 @@ def tracked_persist(df: DataFrame) -> DataFrame:
     df.persist()
     with _LOCK:
         _TRACKED.append((threading.get_ident(), df))
+    _COUNT.n = persist_count() + 1
     return df
+
+
+def persist_count() -> int:
+    """How many frames this thread has tracked so far. A caller that
+    must know whether some code persisted a frame (the plan cache never
+    keeps such a plan) compares the count before and after it."""
+    return getattr(_COUNT, "n", 0)
 
 
 def _unpersist_all(frames: list[DataFrame]) -> None:

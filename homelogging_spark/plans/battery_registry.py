@@ -10,6 +10,8 @@ hash-matches exactly — no rows-only fallback needed.
 
 from __future__ import annotations
 
+import os
+import threading
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -18,7 +20,8 @@ from pyspark.sql import functions as F
 from homelogging_spark.functions.numeric import quantize, quantize_sql
 from homelogging_spark.operators.aggregations import time_bucket_agg
 from homelogging_spark.operators.battery import battery_zero_export, daily_cycles_report
-from homelogging_spark.tables import load_table
+from homelogging_spark.session import session_memo
+from homelogging_spark.tables import _fingerprint, load_table, record_input
 
 # Reference constants (ZeroExport.cs:35-38)
 CAPACITY = 2.7
@@ -43,17 +46,26 @@ def _minute_power(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # The fold output feeds two reports (full trace + daily cycles). The
 # applyInPandas fold is the most expensive stage of either query, so the
-# frame is computed once per (session, sf_dir) and persisted — one plan,
-# two sinks, exactly the "8 scans for one report" fix VERDICT r1 asked
-# for on the flagship, applied to the battery pair. At real scale this
-# frame is a materialized simulation table shared by downstream reports.
-_SIM_CACHE: dict[tuple[str, str], DataFrame] = {}
+# frame is computed once per (session, sf_dir, events fingerprint) and
+# persisted — one plan, two sinks, exactly the "8 scans for one report"
+# fix VERDICT r1 asked for on the flagship, applied to the battery pair.
+# A rewritten events file gets a fresh fold and the replaced frame is
+# unpersisted. At real scale this frame is a materialized simulation
+# table shared by downstream reports.
+_SIM_SLOT = "_battery_sims"  # session memo: sf_dir -> (fingerprint, frame)
+_SIM_LOCK = threading.Lock()
 
 
 def _shared_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    sim = _SIM_CACHE.get(key)
-    if sim is None:
+    events = os.path.join(sf_dir, "events.parquet")
+    fp = _fingerprint(events)
+    memo = session_memo(spark, _SIM_SLOT)
+    with _SIM_LOCK:
+        hit = memo.get(sf_dir)
+        if hit is not None and fp is not None and hit[0] == fp:
+            # the fold reads events: a plan over it goes stale with them
+            record_input(events)
+            return hit[1]
         sim = battery_zero_export(
             _minute_power(spark, sf_dir),
             keys=["user_id"],
@@ -62,8 +74,12 @@ def _shared_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
             capacity=CAPACITY,
             efficiency=EFFICIENCY,
             max_power_kw=MAX_POWER_KW,
-        ).persist()
-        _SIM_CACHE[key] = sim
+        )
+        if fp is None:  # cannot tell a rewrite: no memo, nothing to free
+            return sim
+        memo[sf_dir] = (fp, sim.persist())
+    if hit is not None:
+        hit[1].unpersist()
     return sim
 
 

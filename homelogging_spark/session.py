@@ -8,6 +8,8 @@ them on ``local[N]`` which exercises the same plans.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from typing import Any
 
 from pyspark.sql import SparkSession
 
@@ -73,3 +75,16 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def session_memo(spark: SparkSession, slot: str, factory: Callable[[], Any] = dict):
+    """The memo named ``slot`` (made by ``factory`` on first use), owned
+    by the session object itself, for memos of frames built on that
+    session. It lives and dies with the session: a module-level map
+    keyed on the session, even a weak one, would be kept alive by the
+    memoized frames' own references to it. A stopped and recreated
+    session is a new object with empty memos."""
+    memo = vars(spark).get(slot)
+    if memo is None:
+        memo = vars(spark).setdefault(slot, factory())
+    return memo

@@ -19,10 +19,22 @@ inference. A hit passes the memoized schema to the reader: Spark still
 lists the files, so new files and partitions are seen, but it starts no
 job. A path that cannot be fingerprinted (missing, or a URI with a
 scheme) is always read the plain way, so its errors stay Spark's own.
+
+The same fingerprints guard the prepared registry plans
+(``plans/plancache.py``). While a registry query is built,
+:func:`read_parquet` reports every path it reads, and
+:func:`_fixture_stale` every source a fixture is derived from, to the
+thread's input recorder (:func:`recorded_inputs`); a cached plan is
+served again only while each recorded fingerprint is unchanged. A
+plain ``spark.read`` is not recorded, and the plan cache never keeps a
+plan over a file relation it did not record; a builder that reads a
+file on the driver (Python file I/O into a local frame) must report it
+with :func:`record_input` itself.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
 import threading
 import weakref
@@ -75,10 +87,42 @@ def _fingerprint(path: str) -> tuple | None:
     return (own, success)
 
 
+_RECORDING = threading.local()
+
+
+@contextlib.contextmanager
+def recorded_inputs():
+    """Collect the inputs this thread reports (:func:`record_input`)
+    inside the block, as ``{absolute path: fingerprint}``. Recorders
+    nest: an input is reported to every open one. A path reported twice
+    with different fingerprints (rewritten during the block) maps to
+    None, as does a path that cannot be fingerprinted."""
+    rec: dict = {}
+    stack = _RECORDING.__dict__.setdefault("stack", [])
+    stack.append(rec)
+    try:
+        yield rec
+    finally:
+        stack.pop()
+
+
+def record_input(path: str) -> None:
+    """Report ``path`` as an input of whatever the thread is building;
+    a no-op when no recorder is open."""
+    stack = getattr(_RECORDING, "stack", None)
+    if not stack:
+        return
+    fp = _fingerprint(path)
+    path = os.path.abspath(path)
+    for rec in stack:
+        rec[path] = fp if rec.get(path, fp) == fp else None
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` with the inferred schema memoized per
     session (see the module docstring for the key and when it is
-    refreshed)."""
+    refreshed). The path is reported to the thread's input recorder."""
+    record_input(path)
     fp = _fingerprint(path)
     if fp is None:
         return spark.read.parquet(path)
@@ -191,7 +235,10 @@ def _fixture_stale(path: str, *source_files: str) -> bool:
     """A fixture needs (re)building when its _SUCCESS marker is missing
     or older than any source parquet it was derived from — so a
     regenerated testdata dir invalidates the cache instead of silently
-    serving stale rows."""
+    serving stale rows. Each source is reported to the thread's input
+    recorder, so a plan over the fixture goes stale with its sources."""
+    for src in source_files:
+        record_input(src)
     marker = os.path.join(path, "_SUCCESS")
     if not os.path.exists(marker):
         return True
@@ -249,7 +296,9 @@ def meters_table(spark: SparkSession, sf_dir: str) -> DataFrame:
                 from homelogging_spark.operators.ingest import upsert_meters
 
                 updates = meters_dim(load_table(spark, sf_dir, "events"))
-                existing = spark.createDataFrame([], updates.schema)
+                # an empty frame planned on the JVM alone: a local
+                # createDataFrame would start Python workers to read it
+                existing = updates.limit(0)
                 upsert_meters(existing, updates).coalesce(1).write.mode(
                     "overwrite"
                 ).parquet(path)

@@ -44,3 +44,39 @@ def jobs_started(spark):
         return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
     return run
+
+
+@pytest.fixture
+def own_sf_dir(tmp_path):
+    """A private copy of the test tables that a test may rewrite. The
+    fixtures built for it under spark-warehouse are removed afterwards."""
+    import glob
+    import shutil
+
+    from homelogging_spark.tables import _fixture_path
+
+    out = tmp_path / "sf"
+    shutil.copytree(SF_DIR, out)
+    yield str(out)
+    pattern = _fixture_path(str(out), "*")
+    for path in glob.glob(pattern) + glob.glob(pattern + ".*"):
+        if os.path.isdir(path):
+            shutil.rmtree(path, ignore_errors=True)
+        else:
+            os.remove(path)
+
+
+@pytest.fixture
+def shrink_events():
+    """``shrink_events(sf_dir)`` replaces the events table of a private
+    sf dir by a new file holding its first half of rows."""
+
+    def run(sf_dir):
+        import pyarrow.parquet as pq
+
+        path = os.path.join(sf_dir, "events.parquet")
+        table = pq.read_table(path)
+        pq.write_table(table.slice(0, table.num_rows // 2), path + ".new")
+        os.replace(path + ".new", path)
+
+    return run

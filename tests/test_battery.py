@@ -111,3 +111,38 @@ class TestSparkFold:
         full = simulate_battery_series([-600.0, 300.0, 500.0, 700.0])
         assert rep["2024-04-01"] == pytest.approx(full[1][3])
         assert rep["2024-04-02"] == pytest.approx(full[3][3] - full[1][3])
+
+
+class TestSharedSimMemo:
+    def test_rewritten_events_refold_and_free_the_old_frame(
+        self, spark, own_sf_dir, shrink_events
+    ):
+        """The fold memo is keyed on the events fingerprint: a rewrite
+        gets a fresh fold, the replaced frame is unpersisted, and a memo
+        hit still reports events, so battery_panel stays cacheable."""
+        import duckdb
+
+        from homelogging_spark.plans.battery_registry import _shared_sim
+        from homelogging_spark.plans.plancache import clear_plan_cache
+        from homelogging_spark.plans.registry import ORACLES, QUERIES
+        from tools.check_oracle import compare
+
+        fn = QUERIES["battery_panel"]
+        first = fn(spark, own_sf_dir)
+        first.count()
+        sim = _shared_sim(spark, own_sf_dir)
+        assert sim.storageLevel.useMemory
+        assert fn(spark, own_sf_dir) is first
+        clear_plan_cache(spark)
+        rebuilt = fn(spark, own_sf_dir)  # over the memoized fold
+        assert rebuilt is not first and fn(spark, own_sf_dir) is rebuilt
+        shrink_events(own_sf_dir)
+        second = fn(spark, own_sf_dir)
+        assert second is not rebuilt
+        assert _shared_sim(spark, own_sf_dir) is not sim
+        assert not sim.storageLevel.useMemory and not sim.storageLevel.useDisk
+        con = duckdb.connect()
+        events = f"{own_sf_dir}/events.parquet"
+        con.execute(f"CREATE VIEW events AS SELECT * FROM '{events}'")
+        want = con.execute(ORACLES["battery_panel"]).fetchdf()
+        assert compare("battery_panel", second.toPandas(), want)

@@ -126,3 +126,60 @@ def test_concurrent_reads_see_their_own_schema(spark, tmp_path):
         sys.setswitchinterval(prev)
     assert not any(t.is_alive() for t in threads)
     assert errors == []
+
+
+_NO_DAEMON_PROBE = """
+import os
+import sys
+
+from homelogging_spark.session import get_spark
+from homelogging_spark.tables import meters_table
+
+
+def python_daemons():
+    parent, cmdline = {}, {}
+    for entry in os.listdir("/proc"):
+        if entry.isdigit():
+            try:
+                with open(f"/proc/{entry}/stat") as fh:
+                    parent[int(entry)] = int(fh.read().rsplit(")", 1)[1].split()[1])
+                with open(f"/proc/{entry}/cmdline", "rb") as fh:
+                    cmdline[int(entry)] = fh.read()
+            except OSError:
+                continue
+
+    def mine(pid):
+        while pid in parent and pid not in (0, 1):
+            if pid == os.getpid():
+                return True
+            pid = parent[pid]
+        return False
+
+    return sum(b"pyspark.daemon" in c.split(b"\\0") and mine(p) for p, c in cmdline.items())
+
+
+spark = get_spark(master="local[1]", shuffle_partitions=1)
+print(meters_table(spark, sys.argv[1]).count(), python_daemons())
+spark.stop()
+"""
+
+
+def test_cold_meters_build_starts_no_python_worker(own_sf_dir):
+    """The fixture's empty existing-rows frame is planned on the JVM, so
+    a fresh session builds the meters fixture without a pyspark.daemon."""
+    import os
+    import subprocess
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", _NO_DAEMON_PROBE, own_sf_dir],
+        cwd=root,
+        env=dict(os.environ, SPARK_DRIVER_MEMORY="512m"),
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    rows, daemons = map(int, out.stdout.split()[-2:])
+    assert rows > 0
+    assert daemons == 0

@@ -7,14 +7,20 @@ For each query, times:
   build    — fn(spark, sf_dir) returning the DataFrame (Python-side
              plan construction, py4j traffic, analysis trigger)
   exec1    — first .write.format('noop') on that frame (codegen + run)
-  rebuild  — a second fn() call (warm JVM, fresh plan)
-  exec2    — its noop write (the bench's steady-state per-iter cost)
+  rebuild  — a second fn() call after ``clear_plan_cache`` (warm JVM,
+             fresh plan: the cost of a plan-cache miss)
+  exec2    — its noop write
+  cached   — a third fn() call, served from the plan cache when the
+             query is cacheable (marked ``[hit]``; plans/plancache.py)
+  exec3    — its noop write
 
-The bench times build+exec per iteration, so (rebuild+exec2) ~= the
-bench median; the build/exec split says whether to attack plan size or
-execution. Next to each time, ``[N jobs]`` is the number of Spark jobs
-that step started: a warm rebuild should start none, so a job there is
-a schema inference or an eager action paid on every run of the query.
+A rerun between writes is a plan-cache hit, so (cached+exec3) ~= the
+bench's steady-state per-iter cost, and (rebuild+exec2) is what a rerun
+after a write costs; the build/exec split says whether to attack plan
+size or execution. Next to each time, ``[N jobs]`` is the number of
+Spark jobs that step started: a warm rebuild should start none, so a
+job there is a schema inference or an eager action paid on every run
+of the query.
 """
 
 from __future__ import annotations
@@ -40,6 +46,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     from homelogging_spark.functions.cachelife import release_caches
+    from homelogging_spark.plans.plancache import clear_plan_cache
     from homelogging_spark.tables import load_table
 
     load_table(spark, sf_dir, "events").count()
@@ -71,13 +78,19 @@ def main() -> None:
         df, build, build_j = timed(lambda: fn(spark, sf_dir))
         _, exec1, exec1_j = timed(lambda: noop(df))
         release_caches()
+        clear_plan_cache(spark)
         df2, rebuild, rebuild_j = timed(lambda: fn(spark, sf_dir))
         _, exec2, exec2_j = timed(lambda: noop(df2))
         release_caches()
+        df3, cached, cached_j = timed(lambda: fn(spark, sf_dir))
+        _, exec3, exec3_j = timed(lambda: noop(df3))
+        release_caches()
+        hit = " [hit]" if df3 is df2 else ""
         print(
             f"{n}: build={build:.3f} [{build_j} jobs] exec1={exec1:.3f} [{exec1_j} jobs] "
             f"rebuild={rebuild:.3f} [{rebuild_j} jobs] exec2={exec2:.3f} [{exec2_j} jobs] "
-            f"(bench-like iter={rebuild + exec2:.3f})",
+            f"cached={cached:.4f}{hit} [{cached_j} jobs] exec3={exec3:.3f} [{exec3_j} jobs] "
+            f"(bench-like iter={cached + exec3:.3f})",
             flush=True,
         )
 
