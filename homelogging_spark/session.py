@@ -15,6 +15,22 @@ from pyspark.sql import SparkSession
 
 from homelogging_spark.protoshim import ensure_protobuf
 
+# the directory holding the homelogging_spark package
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def ensure_worker_path() -> None:
+    """Put the package's parent directory on ``PYTHONPATH``, which the
+    Python workers Spark forks inherit at context start, so they import
+    ``homelogging_spark`` (its UDFs, folds and the worker daemon) from
+    any driver cwd. Without it they find the package only when the
+    driver runs from the repo root, which ``python -m`` puts on their
+    ``sys.path`` as the cwd."""
+    existing = os.environ.get("PYTHONPATH", "")
+    parts = existing.split(os.pathsep) if existing else []
+    if PACKAGE_PARENT not in parts:
+        os.environ["PYTHONPATH"] = os.pathsep.join(parts + [PACKAGE_PARENT])
+
 
 def get_spark(
     app_name: str = "homelogging-spark",
@@ -42,10 +58,25 @@ def get_spark(
       the call sites back. It is a static conf, and PySpark reads it
       once per process, so it takes effect only on the call that
       creates the process's session.
+    - Python workers run under ``homelogging_spark.workerd``
+      (``spark.python.daemon.module``): ``pyspark.daemon`` with the
+      zip directory re-read that CPython < 3.12 does at the start of
+      every task (``importlib.invalidate_caches()`` in
+      ``pyspark.worker_util``) skipped while the archive is unchanged.
+      That re-read was ~0.2 s of worker CPU per task, before the task
+      read a row (~0.04 s is left), which every streaming micro-batch
+      with a pandas UDF paid. Changed zips are still re-read; CPython
+      >= 3.12 keeps the stock ``zipimport``. Like every core conf, it
+      applies only to the call that creates the process's
+      SparkContext: sessions created otherwise (a plain
+      ``SparkSession.builder`` session handed to ``__spark_entry__``)
+      keep the stock daemon.
     """
-    # must precede session creation: TWS Python workers need
-    # google.protobuf, and they inherit PYTHONPATH at context start
+    # must precede session creation: Python workers inherit PYTHONPATH
+    # at context start; TWS workers need google.protobuf, and every
+    # worker needs the package (the daemon module is in it)
     ensure_protobuf()
+    ensure_worker_path()
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     if master is None:
         master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
@@ -71,6 +102,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.python.daemon.module", "homelogging_spark.workerd")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

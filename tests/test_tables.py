@@ -155,7 +155,10 @@ def python_daemons():
             pid = parent[pid]
         return False
 
-    return sum(b"pyspark.daemon" in c.split(b"\\0") and mine(p) for p, c in cmdline.items())
+    daemons = (b"pyspark.daemon", b"homelogging_spark.workerd")
+    return sum(
+        any(d in c.split(b"\\0") for d in daemons) and mine(p) for p, c in cmdline.items()
+    )
 
 
 spark = get_spark(master="local[1]", shuffle_partitions=1)
@@ -166,7 +169,8 @@ spark.stop()
 
 def test_cold_meters_build_starts_no_python_worker(own_sf_dir):
     """The fixture's empty existing-rows frame is planned on the JVM, so
-    a fresh session builds the meters fixture without a pyspark.daemon."""
+    a fresh session builds the meters fixture without a Python worker
+    daemon (pyspark.daemon, or the workerd wrapping it)."""
     import os
     import subprocess
 

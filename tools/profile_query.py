@@ -20,7 +20,10 @@ after a write costs; the build/exec split says whether to attack plan
 size or execution. Next to each time, ``[N jobs]`` is the number of
 Spark jobs that step started: a warm rebuild should start none, so a
 job there is a schema inference or an eager action paid on every run
-of the query.
+of the query. After the job count, ``py N s`` is the CPU seconds the
+Python worker processes under the JVM (worker daemons and the workers
+they fork, read from /proc) spent in that step: a step bound by Python
+per-task cost (a pandas UDF, an applyInPandas fold) shows it there.
 """
 
 from __future__ import annotations
@@ -33,6 +36,34 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from homelogging_spark.session import get_spark
+
+
+def python_worker_cpu_s(jvm_pid: int) -> float:
+    """CPU seconds (user + system, reaped children included) spent so
+    far by the processes under the JVM: its Python worker daemons and
+    their workers."""
+    parent, ticks = {}, {}
+    for entry in os.listdir("/proc"):
+        if not entry.isdigit():
+            continue
+        try:
+            with open(f"/proc/{entry}/stat") as fh:
+                fields = fh.read().rsplit(")", 1)[1].split()
+        except OSError:
+            continue  # exited while listing
+        parent[int(entry)] = int(fields[1])
+        ticks[int(entry)] = sum(int(x) for x in fields[11:15])
+
+    def under_jvm(pid: int) -> bool:
+        pid = parent.get(pid, 0)
+        while pid not in (0, 1):
+            if pid == jvm_pid:
+                return True
+            pid = parent.get(pid, 0)
+        return False
+
+    total = sum(t for pid, t in ticks.items() if under_jvm(pid))
+    return total / os.sysconf("SC_CLK_TCK")
 
 
 def main() -> None:
@@ -53,12 +84,15 @@ def main() -> None:
     load_table(spark, sf_dir, "lineitem").count()
 
     sc = spark.sparkContext
+    jvm_pid = int(sc._jvm.java.lang.ProcessHandle.current().pid())
     groups = itertools.count()
 
     def timed(step):
-        """(step(), its seconds, the Spark jobs it started)."""
+        """(step(), its seconds, "[N jobs, py S s]": the Spark jobs it
+        started and the Python worker CPU seconds it used)."""
         group = f"profile-{next(groups)}"
         sc.setJobGroup(group, group)
+        cpu0 = python_worker_cpu_s(jvm_pid)
         t0 = time.time()
         try:
             out = step()
@@ -68,7 +102,8 @@ def main() -> None:
             sc.setLocalProperty("spark.job.description", None)
         # the status tracker is fed by the asynchronous listener bus
         sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return out, elapsed, len(sc.statusTracker().getJobIdsForGroup(group))
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        return out, elapsed, f"[{jobs} jobs, py {python_worker_cpu_s(jvm_pid) - cpu0:.2f} s]"
 
     def noop(df):
         df.write.format("noop").mode("overwrite").save()
@@ -87,9 +122,9 @@ def main() -> None:
         release_caches()
         hit = " [hit]" if df3 is df2 else ""
         print(
-            f"{n}: build={build:.3f} [{build_j} jobs] exec1={exec1:.3f} [{exec1_j} jobs] "
-            f"rebuild={rebuild:.3f} [{rebuild_j} jobs] exec2={exec2:.3f} [{exec2_j} jobs] "
-            f"cached={cached:.4f}{hit} [{cached_j} jobs] exec3={exec3:.3f} [{exec3_j} jobs] "
+            f"{n}: build={build:.3f} {build_j} exec1={exec1:.3f} {exec1_j} "
+            f"rebuild={rebuild:.3f} {rebuild_j} exec2={exec2:.3f} {exec2_j} "
+            f"cached={cached:.4f}{hit} {cached_j} exec3={exec3:.3f} {exec3_j} "
             f"(bench-like iter={cached + exec3:.3f})",
             flush=True,
         )
